@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench contract: run every registered query at SPARK_GRAFT_SF_DIR,
   * print ONE JSON line with per-query seconds. The one-time graph
   * materialization (the reference's bulk-load phase) is timed separately
@@ -24,32 +22,7 @@ object Bench {
     // exists to adjudicate
     val runCpu0 = CpuWindow.snapshot()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE coalescing by TARGET SIZE, not parallelism (r15): the
-      // upstream default (parallelismFirst=true) keeps ~defaultParallelism
-      // post-shuffle partitions however small the data, so every stage
-      // of every query schedules `cpus` near-empty tasks — pure
-      // scheduler latency at any scale where a stage's bytes fit fewer
-      // partitions. false is Spark's own documented recommendation
-      // ("it's recommended to set this config to false and respect the
-      // configured target size"); the 64m advisory equals the upstream
-      // default and is env-overridable for cluster runs, where
-      // size-driven coalescing picks the honest partition count for
-      // big shuffles (guide §2.2: 100 MB-1 GB partitions). Measured
-      // +7..53% per query across a 18-query A/B at sf0.1, no
-      // regressions outside noise (OPTIMIZATION_r15.md).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64m"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -206,8 +179,8 @@ object Bench {
         stageMap.forEach { (sid, q) => w2.println(s"$sid\t$q") }
       } finally w2.close()
     }
-    val results = measured.map { case (n, ts) => n -> ts(ts.size / 2) } :+
-      ("graph_build" -> buildSec)
+    val medians = measured.map { case (n, ts) => n -> ts(ts.size / 2) }
+    val results = medians :+ ("graph_build" -> buildSec)
 
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
@@ -232,13 +205,8 @@ object Bench {
     val runPcts = CpuWindow.delta(runCpu0, CpuWindow.snapshot())
     val spinPost = CpuWindow.spinMs()
     val streamPost = CpuWindow.streamMs()
-    val spinJson = s""","spin_ms":{"pre":[${spinPre._1},${spinPre._2}],""" +
-      s""""post":[${spinPost._1},${spinPost._2}]},""" +
-      s""""stream_ms":{"pre":[${streamPre._1},${streamPre._2}],""" +
-      s""""post":[${streamPost._1},${streamPost._2}]},""" +
-      s""""build_spin_ms":[${buildSpin._1},${buildSpin._2}],""" +
-      s""""build_stream_ms":[${buildStream._1},${buildStream._2}]"""
-    val runCpuFrag = runPcts.map(c => s""","cpu":${c.json}""").getOrElse("")
+    val probes = Probes(spinPre, spinPost, streamPre, streamPost,
+      buildSpin, buildStream)
     // run-level percentages live under their OWN key in the full
     // artifact: the first r14 sf1 run appended them as a second "cpu"
     // member, and JSON parsers keep the last duplicate — the whole
@@ -248,36 +216,14 @@ object Bench {
     // the full artifact always carries the run-level window fields —
     // the summary line may have to drop them to fit its budget
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs_per_query":$runsPer,"spread":$spread,"errors":$errJson,"cpu":$cpuJson$runCpuFull$spinJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs_per_query":$runsPer,"spread":$spread,"errors":$errJson,"cpu":$cpuJson$runCpuFull,${probes.json},"sf":"$sfDir"}"""
 
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     val w = new java.io.PrintWriter(fullPath, "UTF-8")
     try w.println(fullJson) finally w.close()
 
-    def r3(d: Double): Double = math.round(d * 1000) / 1000.0
-    // the summary's per-query map is the FULL median map, r3-rounded
-    // (r15 verdict #1: the old compact line carried only 4 headline
-    // rows, so even a successful parse would have starved the driver's
-    // per_query and scaling blocks; bench_full.json keeps full precision
-    // plus spread/errors/per-query cpu)
-    val allQueries = results.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val famNames = Seq("q_sql", "q_match", "q_path", "q_dml", "q_dedup",
-      "q_ann", "q_multimodal", "q_text", "q_pipeline", "q_graphx")
-    def family(n: String): String =
-      famNames.find(f => n.startsWith(f + "_"))
-        .map(_.stripPrefix("q_")).getOrElse("other")
-    val famMap: Map[String, Double] = measured
-      .groupBy { case (n, _) => family(n) }
-      .map { case (f, qq) =>
-        f -> qq.map { case (_, ts) => ts(ts.size / 2) }.sum
-      }
-    val famSums = famMap.toSeq.sortBy(_._1)
-      .map { case (f, v) => "\"" + f + "\":" + r3(v) }
-      .mkString("{", ",", "}")
-    val out =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$allQueries,"families":$famSums,"n_queries":${measured.size},"n_errors":${errors.size},"runs_per_query":$runsPer$runCpuFrag$spinJson,"sf":"$sfDir","full":"$fullPath"}"""
+    val out = summaryLine(medians, buildSec, errors.size, runsPer, runPcts,
+      Some(probes), sfDir, fullPath)
     // the contract line is duplicated to a fixed sibling artifact: a
     // harness that tail-captures a bounded window of stdout (the r12
     // ~2000-char observation) can always recover the identical line
@@ -326,14 +272,13 @@ object Bench {
       var rerunStream: Option[(Long, Long)] = None
       var rerunCpu: Option[CpuWindow.Pcts] = None
       val violations = confirmedViolations(
-        famMap + ("graph_build" -> buildSec), budgets,
+        familySums(medians) + ("graph_build" -> buildSec), budgets,
         flagged => {
           System.err.println(s"[bench-budget] re-running " +
             s"${flagged.toSeq.sorted.mkString(",")} once to separate " +
             "regression from transient contention")
           val rerunCpu0 = CpuWindow.snapshot()
-          val firstMedians = measured
-            .map { case (n, ts) => n -> ts(ts.size / 2) }.toMap
+          val firstMedians = medians.toMap
           val fresh = measured.map(_._1)
             .filter(n => flagged.contains(family(n)))
             .map { n =>
@@ -404,6 +349,64 @@ object Bench {
     spark.stop()
   }
 
+  private def r3(d: Double): Double = math.round(d * 1000) / 1000.0
+
+  private val famNames = Seq("q_sql", "q_match", "q_path", "q_dml",
+    "q_dedup", "q_ann", "q_multimodal", "q_text", "q_pipeline", "q_graphx")
+
+  /** a query's budget family: its `q_<family>_` prefix, else "other" */
+  private def family(n: String): String =
+    famNames.find(f => n.startsWith(f + "_"))
+      .map(_.stripPrefix("q_")).getOrElse("other")
+
+  /** per-family sums of the query medians */
+  private def familySums(medians: Seq[(String, Double)])
+      : Map[String, Double] =
+    medians.groupBy { case (n, _) => family(n) }
+      .map { case (f, qq) => f -> qq.map(_._2).sum }
+
+  /** The run's window calibrations, each a (1-thread, 32-thread) wall
+    * ms pair: spin and stream probes before and after the run, and the
+    * pair the graph build ran under.
+    */
+  private[graft] final case class Probes(spinPre: (Long, Long),
+      spinPost: (Long, Long), streamPre: (Long, Long),
+      streamPost: (Long, Long), buildSpin: (Long, Long),
+      buildStream: (Long, Long)) {
+    private def pair(p: (Long, Long)) = s"[${p._1},${p._2}]"
+    def json: String =
+      s""""spin_ms":{"pre":${pair(spinPre)},"post":${pair(spinPost)}},""" +
+        s""""stream_ms":{"pre":${pair(streamPre)},"post":${pair(streamPost)}},""" +
+        s""""build_spin_ms":${pair(buildSpin)},""" +
+        s""""build_stream_ms":${pair(buildStream)}"""
+  }
+
+  /** The bench's summary line — the driver-parsed last line of stdout,
+    * pure so its key order can be pinned. The per-query map is the FULL
+    * median map plus graph_build, r3-rounded (r15 verdict #1: the old
+    * compact line carried only 4 headline rows, so even a successful
+    * parse would have starved the driver's per_query and scaling
+    * blocks; bench_full.json keeps full precision plus
+    * spread/errors/per-query cpu). `cpu` and the probe members are
+    * omitted when absent.
+    */
+  private[graft] def summaryLine(medians: Seq[(String, Double)],
+      buildSec: Double, nErrors: Int, runsPer: Int,
+      cpu: Option[CpuWindow.Pcts], probes: Option[Probes], sfDir: String,
+      fullPath: String): String = {
+    val results = medians :+ ("graph_build" -> buildSec)
+    val total = results.map(_._2).sum
+    val allQueries = results.sortBy(_._1)
+      .map { case (k, v) => "\"" + k + "\":" + r3(v) }
+      .mkString("{", ",", "}")
+    val famSums = familySums(medians).toSeq.sortBy(_._1)
+      .map { case (f, v) => "\"" + f + "\":" + r3(v) }
+      .mkString("{", ",", "}")
+    val cpuFrag = cpu.map(c => s""","cpu":${c.json}""").getOrElse("")
+    val probeFrag = probes.map("," + _.json).getOrElse("")
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$allQueries,"families":$famSums,"n_queries":${medians.size},"n_errors":$nErrors,"runs_per_query":$runsPer$cpuFrag$probeFrag,"sf":"$sfDir","full":"$fullPath"}"""
+  }
+
   /** Clean-window 32-thread spin calibration (wall ms for 2^29 xorshift
     * steps, slowest of 32 threads) — the r13 clean-window driver run
     * measured pre [1157, 1401] / post [1152, 1255] on this harness.
@@ -414,8 +417,8 @@ object Bench {
 
   /** Clean-window 32-thread memory-stream calibration (wall ms for the
     * slowest of 32 threads each streaming 8 x 128 MiB from the shared
-    * DRAM-resident buffer). Calibrated r16 on this harness via
-    * graft.tools.StreamCal: six consecutive clean-window probes read
+    * DRAM-resident buffer). Calibrated r16 on this harness by repeated
+    * [[CpuWindow.streamMs]] calls: six consecutive clean-window probes read
     * worst32 145-324 ms (median ~250) — 350 is the observed clean
     * ceiling, so the 1.5x factor flags a window only above ~525 ms,
     * i.e. when effective bandwidth has genuinely halved. Per-host

@@ -155,7 +155,7 @@ object Dedup {
     * joins compose with the gram key.
     */
   /** (id, len, g) distinct hashed q-grams of prefix-capable docs */
-  private[ext] def editGramRows(df: DataFrame, textCol: String,
+  private def editGramRows(df: DataFrame, textCol: String,
       idCol: String, maxDist: Int, q: Int): DataFrame =
     df.filter(col(textCol).isNotNull)
       .select(col(idCol).cast(LongType).as("id"), col(textCol).as("t"),
@@ -173,7 +173,7 @@ object Dedup {
     * `dfLookup` (g, gdf); grams absent from the lookup order as df 0
     * (new grams are by definition the rarest)
     */
-  private[ext] def editPrefixFrom(grams: DataFrame, dfLookup: DataFrame,
+  private def editPrefixFrom(grams: DataFrame, dfLookup: DataFrame,
       maxDist: Int, q: Int): DataFrame = {
     val prefLen = q * maxDist + 1
     grams.join(dfLookup, Seq("g"), "left")
@@ -874,7 +874,7 @@ object Dedup {
     * (q_dedup_clusters_df, q_pipeline_curate_v2) run 2–3 pair
     * generators over the SAME corpus and re-derived the same census
     * each time (one window pass + one count job per call — the
-    * +3-jobs-per-run drift JobCount pinned on q_dedup_clusters going
+    * +3-jobs-per-run drift a job timeline pinned on q_dedup_clusters going
     * r10→r11). The memo cuts the census to one job per distinct corpus
     * plan per JVM. Correctness leans on corpus-snapshot immutability:
     * the engine's tables are read-only parquet snapshots and the

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.ext.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical recall probe for the IVF family with k-means++ centroids
@@ -20,11 +19,7 @@ object IvfCheck {
     val kCells = if (args.length > 1) args(1) else "16"
     val topK = if (args.length > 2) args(2) else "100"
     val nQueries = if (args.length > 3) args(3) else "20"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     val emb = Tables.load(spark, sfDir, "embeddings")
     val k = topK.toInt
 

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.ext.Dedup
-import org.apache.spark.sql.SparkSession
 
 /** Empirical recall check: MinHash+LSH pairs must exactly equal the
   * brute-force n-gram Jaccard join at the query threshold, at every scale
@@ -13,11 +12,7 @@ import org.apache.spark.sql.SparkSession
 object LshCheck {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, tau, perms, bands) = args
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     val docs = Tables.load(spark, sfDir, "documents")
     val exact = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 3, tau.toDouble)
       .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Extend the [[MakeSf1]] corpus with 10x TPC-H + events tables, for
@@ -27,11 +28,7 @@ object MakeSf1Tpch {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val out = if (args.length > 1) args(1) else "/tmp/sf1"
     val reps = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def replicate(table: String, keyCols: Seq[String]): Unit = {
       val base = spark.read.parquet(s"$src/$table.parquet")

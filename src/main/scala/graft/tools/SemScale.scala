@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.ext.{SemanticDedup, Similarity}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Trained-k (IVF-posture) semantic-dedup scale probe for the PLANS.md
@@ -21,12 +20,7 @@ object SemScale {
     val sfDir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 3
     val tau = if (args.length > 2) args(2).toDouble else 0.92
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     val emb = Tables.load(spark, sfDir, "embeddings")
     val n = emb.count()

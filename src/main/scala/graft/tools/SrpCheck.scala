@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Sessions, Tables}
 import graft.ext.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Empirical recall check for the SRP auto-blocking path of
@@ -17,11 +16,7 @@ import org.apache.spark.sql.functions._
 object SrpCheck {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, minCos, bits, bands) = args
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     val emb = Tables.load(spark, sfDir, "embeddings")
     def pairSet(df: org.apache.spark.sql.DataFrame) = df
       .select("id_a", "id_b").collect()

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.Sessions
 import graft.ext.{Dedup, Similarity}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Hot-copy stress for the round-9 exact-duplicate collapse on SimHash,
@@ -41,11 +42,7 @@ object StressCollapse {
     val copies = if (args.length > 2) args(2).toInt else 1000
     val unique = if (args.length > 3) args(3).toInt else 20000
     val skipLegacy = args.contains("--skip-legacy")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def time(tag: String)(f: => Long): Long = {
       val t0 = System.nanoTime()

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.Sessions
 import graft.ext.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale stress for the Ed-Join prefix blocking: a templated corpus
@@ -19,10 +19,7 @@ import org.apache.spark.sql.functions._
 object StressEd {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 100000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     import spark.implicits._
 
     def time[T](name: String)(f: => T): T = {

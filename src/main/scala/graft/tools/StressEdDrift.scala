@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.Sessions
 import graft.ext.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The drift-observer REBUILD loop at StressEd scale — the r9/r10
@@ -39,10 +39,7 @@ object StressEdDrift {
     val incDriftN = if (args.length > 2) args(2).toInt else 500
     val planted = 1000
     val novelN = 1500
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def timed[T](name: String)(f: => T): (T, Double) = {
       val s = System.nanoTime()

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.Sessions
 import graft.ext.Dedup
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Adversarial-scale run of the INCREMENTAL edit-distance path — the
@@ -30,10 +30,7 @@ object StressEdInc {
     val incN = if (args.length > 1) args(1).toInt else 10000
     val histSmall = histBig / 4
     val planted = 2000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def timed[T](name: String)(f: => T): (T, Double) = {
       val s = System.nanoTime()

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Sessions
 import graft.ext.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,11 +31,7 @@ object StressHotBucket {
     val groups = if (args.length > 1) args(1).toInt else 5
     val copies = if (args.length > 2) args(2).toInt else 2000
     val unique = if (args.length > 3) args(3).toInt else 50000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     val path = s"$work/hotbucket_g${groups}_c${copies}_u$unique.parquet"
     if (!new java.io.File(path).exists()) {

@@ -2,8 +2,8 @@ package graft.tools
 
 import java.nio.file.Files
 
+import graft.Sessions
 import graft.ext.{ClusteredStore, CorpusSink}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Layout stress: Z-order clustering + the incremental clustered store
@@ -17,12 +17,7 @@ import org.apache.spark.sql.functions._
 object StressLayout {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 5000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def time[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime()

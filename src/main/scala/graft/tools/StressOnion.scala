@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.Sessions
 import graft.ext.Scc
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** SCC stress on DEEP onion topologies — the round-8 verdict's open
@@ -34,11 +34,7 @@ import org.apache.spark.sql.functions._
 object StressOnion {
   def main(args: Array[String]): Unit = {
     val layers = if (args.nonEmpty) args(0).toInt else 10000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
     import spark.implicits._
 
     val n = layers * 3

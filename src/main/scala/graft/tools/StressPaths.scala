@@ -1,9 +1,10 @@
 package graft.tools
 
+import graft.Sessions
 import graft.graph.{GraphBuilder, GraphProvider}
 import graft.meta._
 import graft.paths.PathExpand
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Var-length path stress at hub scale — the round-8 verdict's gap:
@@ -36,11 +37,7 @@ object StressPaths {
     val segs = if (args.length > 0) args(0).toInt else 50000
     val segLen = if (args.length > 1) args(1).toInt else 20
     val hubs = 16
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def time[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime()

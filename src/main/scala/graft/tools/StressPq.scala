@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.Sessions
 import graft.ext.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PQ/ADC scale stress: does the ADC search shape hold when the corpus
@@ -40,12 +41,7 @@ object StressPq {
     val m = 8
     val codes = 256
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def unit(h: org.apache.spark.sql.Column) =
       (pmod(h, lit(2000001L)) - lit(1000000L)).cast("double") / 1e6

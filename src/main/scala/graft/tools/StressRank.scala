@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.Sessions
 import graft.ext.{Lpa, Ppr, Scc}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Rank-operator stress: exact-integer personalized PageRank and
@@ -23,12 +23,7 @@ object StressRank {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toLong else 1000000L
     val e = if (args.length > 1) args(1).toLong else 5000000L
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     def time[A](tag: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.Sessions
 import graft.ext._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale stress: replicate the sf0.1 documents corpus R times with
@@ -19,12 +20,7 @@ object StressScale {
     val sfDir = args(0)
     val work = args(1)
     val replicas = if (args.length > 2) args(2).toInt else 20
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     val path = s"$work/documents_x$replicas.parquet"
     if (!new java.io.File(path).exists()) {

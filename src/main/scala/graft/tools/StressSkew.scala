@@ -1,9 +1,10 @@
 package graft.tools
 
+import graft.Sessions
 import graft.graph.{GraphBuilder, GraphProvider}
 import graft.meta._
 import graft.pattern.{EdgePat, MatchPattern, MatchPlanner, NodePat}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Hub-skew stress: the same node/edge count as a uniform random graph,
@@ -29,18 +30,14 @@ object StressSkew {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 200000
     val e = if (args.length > 1) args(1).toInt else 2000000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // expose the skewed SMJ path at local scale: no broadcast escape
-      // hatch, skew split thresholds sized to the synthetic data
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
+    // expose the skewed SMJ path at local scale: no broadcast escape
+    // hatch, skew split thresholds sized to the synthetic data
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    spark.conf.set(
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8m")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "2m")
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
 
     val graphSchema = GraphSchema(Seq(
       NodeTableDef("Person", 1, Some("id"), Seq("pname"), Seq(

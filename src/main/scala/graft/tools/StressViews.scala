@@ -1,9 +1,10 @@
 package graft.tools
 
+import graft.Sessions
 import graft.graph.{EdgeViewDef, GraphBuilder, GraphProvider, NodeViewDef, ViewProvider}
 import graft.meta._
 import graft.paths.PathExpand
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** View-walk stress: the SAME random graph walked two ways —
@@ -26,12 +27,7 @@ object StressViews {
     val e = if (args.length > 1) args(1).toInt else 2000000
     val seedN = if (args.length > 2) args(2).toInt else 20000
     require(n % 2 == 0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus)
 
     // deterministic random edge list over n nodes
     val eids = spark.range(e).select(col("id").as("eid"))

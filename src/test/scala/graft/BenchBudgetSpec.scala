@@ -258,7 +258,8 @@ class BenchBudgetSpec extends AnyFunSuite {
   // register-bound spin cannot see (r15's 176-278 s oscillation on
   // identical code ran with every spin/CPU counter clean)
 
-  // probe values from the r16 StreamCal calibration of this harness
+  // probe values from the r16 clean-window streamMs calibration of this
+  // harness
   // (clean band: worst32 145-324 ms, clean reference 350)
   private def cleanStreamEv = cleanEv.copy(
     streamPre = (210L, 280L), streamPost = (215L, 300L),
@@ -308,6 +309,41 @@ class BenchBudgetSpec extends AnyFunSuite {
     assert(Bench.windowVerdict(cleanEv).isEmpty)
     assert(Bench.windowVerdict(cleanEv.copy(
       streamPost = (0L, 0L), streamPre = (0L, 0L))).isEmpty)
+  }
+
+  // ---- the summary line (r16 verdict item 9): the driver parses the
+  // bench's last stdout line, so its top-level keys and their order are
+  // a contract
+
+  test("summaryLine: last stdout line keeps its key order, optional " +
+      "cpu and probe members included") {
+    import scala.jdk.CollectionConverters._
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    def keys(line: String): Seq[String] =
+      mapper.readTree(line).fieldNames().asScala.toSeq
+    val medians = Seq("q_sql_a" -> 1.23449, "q_dedup_b" -> 2.0,
+      "q_kcore" -> 0.5)
+    val probes = Bench.Probes((1L, 2L), (3L, 4L), (5L, 6L), (7L, 8L),
+      (9L, 10L), (11L, 12L))
+    val full = Bench.summaryLine(medians, 4.0, 1, 3,
+      Some(CpuWindow.Pcts(1.0, 0.5, 2.0)), Some(probes), "/sf", "f.json")
+    val base = Seq("metric", "value", "unit", "queries", "families",
+      "n_queries", "n_errors", "runs_per_query")
+    assert(keys(full) == base ++ Seq("cpu", "spin_ms", "stream_ms",
+      "build_spin_ms", "build_stream_ms", "sf", "full"), full)
+    val bare = Bench.summaryLine(medians, 4.0, 1, 3, None, None, "/sf",
+      "f.json")
+    assert(keys(bare) == base ++ Seq("sf", "full"), bare)
+    val t = mapper.readTree(full)
+    assert(t.get("value").asDouble == 7.734)
+    assert(t.get("queries").fieldNames().asScala.toSeq ==
+      Seq("graph_build", "q_dedup_b", "q_kcore", "q_sql_a"))
+    assert(t.get("queries").get("q_sql_a").asDouble == 1.234)
+    assert(t.get("families").toString ==
+      """{"dedup":2.0,"other":0.5,"sql":1.234}""")
+    assert(t.get("n_queries").asInt == 3 && t.get("n_errors").asInt == 1)
+    assert(t.get("spin_ms").toString == """{"pre":[1,2],"post":[3,4]}""")
+    assert(t.get("build_stream_ms").toString == "[11,12]")
   }
 
   test("CpuWindow.streamMs returns sane fixed-work calibrations") {
